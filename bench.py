@@ -281,14 +281,11 @@ def main() -> None:
         with open(fp_path) as fh:
             side = json.load(fh)
         same_cpus = side.get("by_cpus", {}).get(str(cpus))
-        if same_cpus is None and str(side.get("cpus", cpus)) == str(cpus):
-            # legacy flat layout, written at this core count
-            same_cpus = side
         # an entry recorded at a DIFFERENT scale factor (a local smoke
         # run) must not feed the comparison either — same flaw class
         # as the core-count poisoning
         if same_cpus and same_cpus.get("sf_dir", sf_dir) == sf_dir:
-            prev_fp = same_cpus.get("plan_fingerprints", {})
+            prev_fp = same_cpus.get("plan_fingerprints", {}) or prev_fp
             prev = same_cpus.get("queries", {}) or prev
             prev_drain = same_cpus.get("stream_drain", {})
 

@@ -25,3 +25,6 @@ the keyed stateful assembly.
 __version__ = "0.1.0"
 
 from openlogreplicator_spark.session import get_spark  # noqa: F401
+from openlogreplicator_spark.worker_zipimport import install as _install
+
+_install()

@@ -98,6 +98,30 @@ _REC_COLUMNS = [
 ]
 
 
+def _concat_records(frames: list[pd.DataFrame]) -> pd.DataFrame:
+    """``pd.concat`` of record frames, with pandas 2's dtype rule made
+    explicit: a column that is all-NA in one frame takes the dtype it
+    has in the other frames, when that dtype can hold NA. pandas
+    deprecated leaving all-NA entries out of the result dtype (a
+    FutureWarning); without this cast a future pandas would turn, say,
+    a float ``bdba`` column object-typed whenever one frame's ``bdba``
+    is all None."""
+    if len(frames) > 1:
+        for col in frames[0].columns:
+            if len({f[col].dtype for f in frames}) == 1:
+                continue
+            all_na = [f[col].isna().all() for f in frames]
+            dtypes = {f[col].dtype for f, na in zip(frames, all_na) if not na}
+            if any(all_na) and len(dtypes) == 1:
+                dtype = dtypes.pop()
+                if dtype.kind in "fcmMO":
+                    frames = [
+                        f.astype({col: dtype}) if na else f
+                        for f, na in zip(frames, all_na)
+                    ]
+    return pd.concat(frames, ignore_index=True, copy=False)
+
+
 def _records_arrow_table(pdf: pd.DataFrame):
     """Pandas record frame (cols/rows as list-of-pairs, numerics
     possibly NaN-widened) → Arrow table in REDO_RECORD_SCHEMA types,
@@ -331,7 +355,7 @@ def assemble_stateful(
     if not frames:
         yield empty
         return
-    comb = pd.concat(frames, ignore_index=True, copy=False)
+    comb = _concat_records(frames)
     # Source contract: records arrive in log order across batches (the
     # reference's reader guarantees the same). The defensive re-sort
     # repairs ordering *within* what we currently hold — null key parts

@@ -375,19 +375,18 @@ def stream_file_sink(
 
     def write(batch_df, batch_id: int) -> None:
         from openlogreplicator_spark.streaming.stream_network import (
-            order_encoded_messages,
+            ordered_rows,
             to_bytes,
         )
 
         if core.skip_batch(batch_id):
             return   # already durable — replayed batch, don't re-append
-        ordered = order_encoded_messages(batch_df)
         # frames without the _odoc column (direct callers) treat every
         # scn-bearing row as data; engine frames always carry it
         has_odoc = "_odoc" in batch_df.columns
 
         def rows():
-            for row in ordered.toLocalIterator():
+            for row in ordered_rows(batch_df):
                 scn = getattr(row, "_oscn", None)
                 yield (
                     to_bytes(row.value),

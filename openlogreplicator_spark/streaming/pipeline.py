@@ -74,7 +74,7 @@ def windowed_metrics(events: DataFrame, watermark: str = "10 minutes") -> DataFr
 
 def observed(df: DataFrame, name: str = "olr_metrics") -> DataFrame:
     """Attach engine counters (reference Metrics.h:49-140 analog):
-    rows seen, DML ops out, bytes-ish proxy."""
+    rows seen and DML ops out."""
     return df.observe(
         name,
         F.count(F.lit(1)).alias("rows_out"),

@@ -657,6 +657,22 @@ def order_encoded_messages(df):
     )
 
 
+def ordered_rows(rendered):
+    """Yield an encoded micro-batch's rows in emission order
+    (:func:`order_encoded_messages`), executing its plan ONCE. The
+    range sort runs two jobs, its boundary sample and its shuffle, and
+    uncached each re-executes everything above the foreachBatch frame:
+    the stateful assembly kernel, its state-store commit and the
+    ``observe()`` counters. Persisting the frame for the funnel's read
+    is the Structured Streaming guide's idiom for more than one action
+    inside foreachBatch."""
+    rendered.persist()
+    try:
+        yield from order_encoded_messages(rendered).toLocalIterator()
+    finally:
+        rendered.unpersist()
+
+
 def stream_network_sink(server: StreamServer, fmt=None,
                         max_message_bytes: int | None = None,
                         encoder=None):
@@ -718,7 +734,6 @@ def stream_network_sink(server: StreamServer, fmt=None,
                 prepared, extra_cols=extra, fmt=fmt,
                 max_message_bytes=max_message_bytes,
             )
-        encoded = order_encoded_messages(rendered)
         # frames without the _odoc column (direct callers with a custom
         # encoder) treat every row as commit-backed data — the same
         # convention as the file funnel; engine frames always carry it
@@ -734,7 +749,7 @@ def stream_network_sink(server: StreamServer, fmt=None,
                     ),
                     to_bytes(row.value),
                 )
-                for row in encoded.toLocalIterator()
+                for row in ordered_rows(rendered)
             ),
             batch_id,
         )

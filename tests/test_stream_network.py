@@ -253,15 +253,19 @@ def test_zmq_transport_handshake_confirm_continue(tmp_path):
         c.confirm(200, 0)
         import time
 
-        # poll the DOC, not just the in-memory watermark: the handler
-        # sets confirmed_scn and THEN persists (both under the server
-        # lock), but this unlocked read can observe the watermark in
-        # the gap before the doc write lands — a loaded box widens
+        # poll the DOC's content, not just the in-memory watermark: the
+        # handler sets confirmed_scn and THEN persists (both under the
+        # server lock), but this unlocked read can observe the watermark
+        # in the gap before the doc write lands — a loaded box widens
         # that gap (flaked once in a full-suite run, r13)
         doc = None
         for _ in range(250):
             doc = read_checkpoint_doc(state_dir, "DBZ")
-            if server.confirmed_scn == 200 and doc is not None:
+            if (
+                server.confirmed_scn == 200
+                and doc is not None
+                and int(doc["scn"]) == 200
+            ):
                 break
             time.sleep(0.02)
         assert server.confirmed_scn == 200

@@ -944,6 +944,27 @@ def test_network_sink_requires_server(spark, tmp_path):
         )
 
 
+def test_concat_records_keeps_dtypes_of_all_na_columns():
+    """A record frame whose numeric column is all None concatenates
+    with the other frames' dtype, without pandas' FutureWarning about
+    all-NA entries (whose future behaviour would make it object)."""
+    import warnings
+
+    import pandas as pd
+
+    from openlogreplicator_spark.streaming.assembly import _concat_records
+
+    typed = pd.DataFrame({"bdba": [5.0, float("nan")], "scn": [1, 2],
+                          "cols": [{"A": "x"}, None]})
+    untyped = pd.DataFrame({"bdba": [None], "scn": [3], "cols": [None]})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        comb = _concat_records([typed, untyped])
+    assert comb["bdba"].dtype == "float64"
+    assert comb["scn"].tolist() == [1, 2, 3]
+    assert comb["cols"].tolist()[0] == {"A": "x"}
+
+
 def test_pre_watchdog_checkpoint_payload_restores_unarmed_then_arms():
     """r11 VERDICT #3 / r12 #2: 'pre-watchdog checkpoints restore
     unarmed' was a code comment riding on additive Arrow schema
