@@ -862,22 +862,31 @@ def _default_buckets(records: DataFrame) -> int:
     (or ``n_buckets``) still tunes the parallelism/launch-latency
     trade."""
     sess = records.sparkSession
+    return _assembly_buckets(
+        sess, max(32, sess.sparkContext.defaultParallelism)
+    )
+
+
+def _assembly_buckets(sess, default: int) -> int:
+    """The xid bucket count: ``spark.olrs.assembly.buckets`` when set,
+    else ``default``. The one parse of the override, shared by the
+    batch and streaming assembly paths (each passes its own default).
+    The value must be a positive integer: ``0`` would build
+    ``pmod(xxhash64(xid), 0)``, which fails the first task under ANSI
+    mode, so a bad value raises here, before any job runs."""
+    raw = sess.conf.get("spark.olrs.assembly.buckets", None)
+    if raw is None:
+        return default
     try:
-        raw = sess.conf.get("spark.olrs.assembly.buckets", None)
-    except Exception:
-        raw = None
-    if raw is not None:
-        try:
-            n = int(raw)
-        except (ValueError, TypeError):
-            n = 0
-        if n <= 0:
-            raise ValueError(
-                f"spark.olrs.assembly.buckets={raw!r}: must be a "
-                "positive integer"
-            )
-        return n
-    return max(32, sess.sparkContext.defaultParallelism)
+        n = int(raw)
+    except (ValueError, TypeError):
+        n = 0
+    if n <= 0:
+        raise ValueError(
+            f"spark.olrs.assembly.buckets={raw!r}: must be a "
+            "positive integer"
+        )
+    return n
 
 
 def assemble_transactions(

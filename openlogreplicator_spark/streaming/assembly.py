@@ -12,6 +12,11 @@ exactly one bucket (per-txn correctness is hash-local), but one Arrow
 batch and one Python invocation then carry THOUSANDS of transactions —
 the same ~10⁴ amortization the batch kernel gets. Keyed by raw xid,
 a busy micro-batch pays one Python-worker round trip per transaction.
+The default bucket count is the stateful operator's partition count
+(``spark.sql.shuffle.partitions``), so each state task calls the kernel
+about once per micro-batch: the kernel has a fixed cost per call
+(~16 ms), which more buckets than state partitions would pay several
+times in one task.
 
 Reference mapping:
 - micro-batch            = LWN group        (Parser.cpp:1260-1460)
@@ -48,6 +53,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from openlogreplicator_spark.operators.transaction_assembly import (
     ASSEMBLED_SCHEMA,
+    _assembly_buckets,
 )
 
 _STATE_SCHEMA = T.StructType(
@@ -270,7 +276,9 @@ def assemble_stateful(
             raise RuntimeError(
                 f"assembly state bucket-count mismatch: checkpoint was "
                 f"written with {stamped} buckets but this session "
-                f"computes {n_buckets} (defaultParallelism changed?). "
+                f"computes {n_buckets} (the default is "
+                f"spark.sql.shuffle.partitions; it changed, or the "
+                f"checkpoint predates that default). "
                 f"Set spark.olrs.assembly.buckets={stamped} to resume "
                 f"this checkpoint, or start a fresh checkpoint "
                 f"directory."
@@ -455,7 +463,8 @@ def assemble_stateful(
     if len(leftover) or skip_xids or max_seen is not None:
         # the arrival-order watermark keeps the bucket's state row
         # alive even with nothing buffered — state rows are bounded by
-        # the bucket count (≤ max(32, defaultParallelism)), not by data
+        # the bucket count (by default spark.sql.shuffle.partitions),
+        # not by data
         state.update(
             (
                 len(leftover),
@@ -545,21 +554,21 @@ def streaming_assemble(
     # amortization as the batch kernel, with per-txn correctness
     # preserved because every record of an xid hashes to one bucket.
     # TTL granularity coarsens with the key: the reaper fires when a
-    # BUCKET has been idle for the TTL (a bucket that keeps receiving
-    # records keeps its stale transactions buffered until log end —
-    # which is the reference's own behavior for open transactions).
+    # BUCKET has been idle for the TTL, and with one bucket per state
+    # partition that is when the whole partition has been idle (a
+    # partition that keeps receiving records keeps its stale
+    # transactions buffered until log end — which is the reference's
+    # own behavior for open transactions).
     # the bucket count is part of the CHECKPOINT contract: xids hash to
     # buckets by it, so resuming in a different-sized environment would
     # re-key state. It is stamped into every state payload; a mismatch
     # on restore raises with the remedy. `spark.olrs.assembly.buckets`
     # pins it explicitly for cross-environment resumes
-    # (r12 review-pass-11).
+    # (r12 review-pass-11), including checkpoints written under the
+    # earlier max(32, defaultParallelism) default.
     sess = redo_stream.sparkSession
-    conf_val = sess.conf.get("spark.olrs.assembly.buckets", None)
-    n_buckets = (
-        int(conf_val)
-        if conf_val
-        else max(32, sess.sparkContext.defaultParallelism)
+    n_buckets = _assembly_buckets(
+        sess, int(sess.conf.get("spark.sql.shuffle.partitions"))
     )
     bucketed = redo_stream.withColumn(
         "_bucket", F.pmod(F.xxhash64("xid"), F.lit(n_buckets))

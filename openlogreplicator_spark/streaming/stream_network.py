@@ -643,10 +643,15 @@ def order_encoded_messages(df):
     matching the reference's builder-queue order where the checkpoint
     record trails the LWN's records; op index; then the FULL split
     part parsed from the 'xid:part' key (try_cast, because a capless
-    FULL key is the raw xid and ANSI cast would throw)."""
+    FULL key is the raw xid and ANSI cast would throw).
+
+    The frame is sorted into ONE partition, the funnel's single reader:
+    a range sort's boundary-sampling job and per-partition reads would
+    add jobs to every micro-batch for a partitioning the driver-side
+    funnel merges back anyway."""
     from pyspark.sql import functions as F
 
-    return df.orderBy(
+    return df.repartition(1).sortWithinPartitions(
         "_oscn",
         F.col("_oxid").asc_nulls_last(),
         "_oidx",
@@ -658,19 +663,15 @@ def order_encoded_messages(df):
 
 
 def ordered_rows(rendered):
-    """Yield an encoded micro-batch's rows in emission order
-    (:func:`order_encoded_messages`), executing its plan ONCE. The
-    range sort runs two jobs, its boundary sample and its shuffle, and
-    uncached each re-executes everything above the foreachBatch frame:
-    the stateful assembly kernel, its state-store commit and the
-    ``observe()`` counters. Persisting the frame for the funnel's read
-    is the Structured Streaming guide's idiom for more than one action
-    inside foreachBatch."""
-    rendered.persist()
-    try:
-        yield from order_encoded_messages(rendered).toLocalIterator()
-    finally:
-        rendered.unpersist()
+    """Iterate an encoded micro-batch's rows in emission order
+    (:func:`order_encoded_messages`) with ONE Spark job, so the plan
+    above the foreachBatch frame (the stateful assembly kernel, its
+    state-store commit and the ``observe()`` counters) executes once.
+    (Spark plans a micro-batch above a stateful operator without
+    adaptive execution; under AQE the sort's shuffle stage would run as
+    a job of its own.) The driver holds the whole sorted micro-batch
+    while it iterates."""
+    return order_encoded_messages(rendered).toLocalIterator()
 
 
 def stream_network_sink(server: StreamServer, fmt=None,

@@ -734,3 +734,67 @@ def test_stop_releases_fixed_port_for_in_process_restart():
         assert second.address[1] == port
         second.stop()
         second.stop()  # idempotent
+
+
+def test_ordered_rows_keeps_the_order_contract_in_one_job(spark):
+    """``ordered_rows`` yields exactly the order of the range sort the
+    funnels used before (kept here as the reference) over a
+    multi-partition frame with every tie-break in play: ties on
+    ``_oscn``, null-``_oxid`` chkpt rows, FULL ``xid:part`` keys and
+    capless raw-xid keys. And it reads the frame with ONE Spark job,
+    where the range sort ran its sample job, its shuffle job and one
+    job per sorted partition."""
+    from pyspark.sql import functions as F
+
+    from openlogreplicator_spark.streaming.stream_network import (
+        ordered_rows,
+    )
+
+    rows = []
+    for i in range(40):
+        scn = 100 + i // 6                      # six rows per scn
+        if i % 6 == 5:                          # chkpt trails its scn
+            rows.append((scn, None, 0, None, f"chkpt{scn}"))
+            continue
+        xid = f"0.{i % 3}.7"                    # xids repeat across scns
+        oidx = (i * 7) % 4
+        # FULL envelopes split per part; capless ones key the raw xid
+        key = f"{xid}:{i % 5}" if i % 2 else xid
+        rows.append((scn, xid, oidx, key, f"m{i}"))
+    schema = "_oscn long, _oxid string, _oidx long, key string, value string"
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 5), schema)
+    assert df.rdd.getNumPartitions() >= 4
+
+    def reference(frame):
+        return frame.orderBy(
+            "_oscn",
+            F.col("_oxid").asc_nulls_last(),
+            "_oidx",
+            F.coalesce(
+                F.element_at(F.split(F.col("key"), ":"), -1)
+                .try_cast("long"),
+                F.lit(0),
+            ),
+        ).collect()
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # the funnels read micro-batches of the stateful assembly, which
+    # Spark plans without adaptive execution; AQE would add its shuffle
+    # stage's map job, so the jobs are counted as the funnel runs them
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, frame in (("rows", df), ("empty", df.where("_oscn < 0"))):
+            want = reference(frame)
+            group = f"ordered-rows-{name}"
+            sc.setJobGroup(group, group)
+            try:
+                got = list(ordered_rows(frame))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert got == want
+            assert len(tracker.getJobIdsForGroup(group)) == 1, name
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(want) == 0 and len(reference(df)) == 40

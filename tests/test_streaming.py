@@ -450,9 +450,12 @@ def test_bucketed_state_interleaves_many_xids(spark, tmp_path):
         .start()
     )
     drain(q)
+    # one bucket per state partition by default: the state holds at
+    # most spark.sql.shuffle.partitions (8 in this session) rows
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] <= 8
     got = [r.asDict() for r in spark.sql("select * from bucketed_many").collect()]
     expected = assemble_transactions_py(records)
-    # 120 xids over ≤32 buckets: every bucket holds several interleaved
+    # 120 xids over 8 buckets: every bucket holds several interleaved
     # transactions — per-xid flush correctness is what's under test
     assert len({e["xid"] for e in expected}) > 32
 
@@ -1166,3 +1169,94 @@ def test_bucket_count_mismatch_raises_with_remedy():
     legacy = _state_payload([])
     state3 = _FakeGroupState(payload=legacy)
     list(assemble_stateful(("0",), iter([]), state3, n_buckets=32))
+
+
+@pytest.mark.parametrize("bad", ["0", "-1", "abc"])
+def test_bucket_override_is_validated_before_any_query(spark, tmp_path, bad):
+    """A non-positive or non-numeric ``spark.olrs.assembly.buckets``
+    raises ValueError when the plan is wired, on the streaming and the
+    batch path alike. Unvalidated, ``0`` built ``pmod(xxhash64(xid),
+    0)`` and the first micro-batch died with REMAINDER_BY_ZERO."""
+    from openlogreplicator_spark.operators.transaction_assembly import (
+        _default_buckets,
+    )
+
+    stream = read_redo_json_stream(spark, str(tmp_path))
+    active = len(spark.streams.active)
+    spark.conf.set("spark.olrs.assembly.buckets", bad)
+    try:
+        with pytest.raises(ValueError, match="must be a positive integer"):
+            streaming_assemble(stream, ttl_timeout=False)
+        with pytest.raises(ValueError, match="must be a positive integer"):
+            _default_buckets(stream)
+    finally:
+        spark.conf.unset("spark.olrs.assembly.buckets")
+    assert len(spark.streams.active) == active
+
+
+def test_checkpoint_under_old_bucket_default_fails_loudly_then_resumes(
+    spark, tmp_path
+):
+    """A checkpoint written with 32 buckets (the earlier default, here
+    pinned by the override) holding open transactions that straddle the
+    restart: resuming under the new default (8 buckets, one per state
+    partition) must fail with the mismatch remedy rather than strand
+    the buffered records, and resuming with the remedy applied emits
+    every transaction exactly once."""
+    records = generate_redo_records(n_txns=60, seed=5)
+    records.sort(key=lambda r: (r["scn"], r["subscn"] or 0, r["block"] or 0, r["offset"] or 0))
+    indir = tmp_path / "redo_in"
+    indir.mkdir()
+    half = len(records) // 2
+    head, tail = records[:half], records[half:]
+    # transactions begun before the restart and committed after it
+    assert {r["xid"] for r in head} & {
+        r["xid"] for r in tail if r["opcode"] == "commit"
+    }
+    ckpt = str(tmp_path / "ckpt")
+    got: list[dict] = []
+
+    def run():
+        q = (
+            streaming_assemble(
+                read_redo_json_stream(
+                    spark, str(indir), max_files_per_trigger=1
+                ),
+                ttl_timeout=False,
+            )
+            .writeStream.foreachBatch(
+                lambda df, _: got.extend(r.asDict() for r in df.collect())
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        drain(q)
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    _write_jsonl(str(indir / "part-000.json"), head)
+    spark.conf.set("spark.olrs.assembly.buckets", "32")
+    try:
+        run()
+    finally:
+        spark.conf.unset("spark.olrs.assembly.buckets")
+    time.sleep(0.05)
+    _write_jsonl(str(indir / "part-001.json"), tail)
+    with pytest.raises(Exception) as failed:
+        run()
+    assert "bucket-count mismatch" in str(failed.value)
+    assert "spark.olrs.assembly.buckets=32" in str(failed.value)
+    spark.conf.set("spark.olrs.assembly.buckets", "32")
+    try:
+        run()
+    finally:
+        spark.conf.unset("spark.olrs.assembly.buckets")
+
+    def norm(events):
+        return sorted(
+            (e["xid"], e["commit_scn"], e["num"], e["op"], e["scn"],
+             tuple(sorted((e["cols"] or {}).items())))
+            for e in events
+        )
+
+    assert norm(got) == norm(assemble_transactions_py(records))
