@@ -50,7 +50,7 @@ from openlogreplicator_spark.operators.dedup import (
     _DOCS_MUTATED_SQL,
     _SHINGLE_DF_CAP,
     _SHINGLES_SQL,
-    shingles,
+    jaccard_pairs,
 )
 from openlogreplicator_spark.sources.tables import load_table
 
@@ -283,66 +283,13 @@ _THREE_GEN_SQL = f"""
 """
 
 
-def _jaccard_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
-    """Near-dup candidate pairs (same shape as dedup_ngram_jaccard)."""
-
-    from pyspark.sql import Window
-
-    # 64-bit shingle hashing — same shuffle-narrowing as
-    # dedup_ngram_jaccard; Jaccard counts are hash-collision-exact at
-    # any realistic corpus size.
-    # ONE persisted frame, already partitioned by shingle: the DF cap is
-    # a window count over that partitioning (replacing the previous
-    # aggregate + anti-join pass over a second persist), and the
-    # self-join below joins ON the partitioning key, so neither side
-    # needs another exchange — the shingle set shuffles exactly twice
-    # (distinct, then the shingle repartition) instead of four times.
-    # r12: a no-sort hot-shingle anti-join variant was A/B-measured at
-    # the 10× probe and reverted — see dedup.dedup_ngram_jaccard.
-    sh = (
-        shingles(corpus)
-        .select("doc_id", F.xxhash64("shingle").alias("shingle"))
-        .distinct()
-        .repartition("shingle")
-        .withColumn(
-            "_df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-        )
-        .filter(F.col("_df") <= _SHINGLE_DF_CAP)
-        .drop("_df")
-        .persist()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(
-            F.col("n_inter")
-            / (F.col("na") + F.col("nb") - F.col("n_inter"))
-            >= threshold
-        )
-        .select("id_a", "id_b")
-    )
-
-
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs (3-gen re-crawl corpus, Jaccard ≥ 0.8) resolved
     into duplicate clusters by connected components; emits one row per
     clustered document with its cluster id (= min doc_id in cluster) and
     the cluster's canonical survivor flag."""
     corpus = _three_gen_corpus(spark, sf_dir)
-    pairs = _jaccard_pairs(corpus, _JACCARD_T)
+    pairs = jaccard_pairs(corpus, _JACCARD_T).select("id_a", "id_b")
     comp = connected_components(
         pairs, src="id_a", dst="id_b", assume_canonical=True
     )
@@ -399,7 +346,7 @@ def dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-keyed agg over the CC output; the argmax folds into a single
     struct-max, so no second pass over members."""
     corpus = _three_gen_corpus(spark, sf_dir)
-    pairs = _jaccard_pairs(corpus, _JACCARD_T)
+    pairs = jaccard_pairs(corpus, _JACCARD_T).select("id_a", "id_b")
     comp = connected_components(
         pairs, src="id_a", dst="id_b", assume_canonical=True
     )
@@ -529,7 +476,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct per (doc_id, g), so a count over the g-partitioned
     # window IS the document frequency — the aggregate + self-join of
     # the previous shape collapses into a window filter on the same
-    # exchange (the _jaccard_pairs restructure, applied here)
+    # exchange (the dedup.jaccard_pairs restructure, applied here)
     grams = substring_fingerprints(corpus).repartition("g")
     shared = grams.withColumn(
         "_nd", F.count(F.lit(1)).over(Window.partitionBy("g"))

@@ -202,13 +202,15 @@ GROUP BY digest
 _SHINGLE_DF_CAP = 100
 
 
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact pairwise Jaccard over 3-word shingles for candidate pairs
-    that share ≥1 (non-boilerplate) shingle; emit near-dup pairs
-    (J ≥ 0.6). The shingle equi-join is the candidate generator — no
-    cross join anywhere; the document-frequency cap bounds its fan-out."""
-    corpus = _docs_with_mutated_copies(spark, sf_dir)
-
+def jaccard_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
+    """The one Jaccard pair generator: exact pairwise Jaccard over
+    3-word shingles for candidate pairs that share ≥1 (non-boilerplate)
+    shingle. Emits ``id_a < id_b, n_inter, _j_raw`` for pairs whose RAW
+    ratio is ≥ ``threshold``. The shingle equi-join is the candidate
+    generator — no cross join anywhere; the document-frequency cap
+    bounds its fan-out. Used by ``dedup_ngram_jaccard`` and by the
+    clustering queries (``clustering.dedup_cluster_cc``,
+    ``dedup_canonical_pick``)."""
     from pyspark.sql import Window
 
     # shingles hash to 64 bits before any exchange: the distinct, the
@@ -219,8 +221,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window count over that partitioning (not a second aggregate +
     # anti-join pass over a second persist), and the self-join joins ON
     # the partitioning key — the shingle set shuffles twice total.
-    # Interleaved A/B at sf0.1 (clustering.py's identical pipeline):
-    # median 8.1s → 5.9s for pairs+components.
+    # Interleaved A/B at sf0.1 (pairs + connected components): median
+    # 8.1s → 5.9s.
     # r12 note: a hot-shingle broadcast anti-join (no sort, cache holds
     # the UNFILTERED set) measured ~10% faster at sf0.1 but parity-to-
     # worse at the 10× probe with a heavy degradation tail (the uncapped
@@ -260,12 +262,20 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_inter")
             / (F.col("na") + F.col("nb") - F.col("n_inter")),
         )
-        # filter the RAW ratio, round only the rendered column — the
-        # oracle's WHERE also compares the raw value, so a pair whose
-        # ratio sits just under the threshold but rounds up to it must
-        # fail on BOTH sides (r12 review-pass-7; same convention as
-        # clustering._jaccard_pairs)
-        .filter(F.col("_j_raw") >= 0.6)
+        # filter the RAW ratio; callers round only a rendered column —
+        # the oracles' WHERE also compares the raw value, so a pair
+        # whose ratio sits just under the threshold but rounds up to it
+        # must fail on BOTH sides (r12 review-pass-7)
+        .filter(F.col("_j_raw") >= threshold)
+        .select("id_a", "id_b", "n_inter", "_j_raw")
+    )
+
+
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs (J ≥ 0.6) of the first-word-mutated re-crawl
+    corpus, with the shared-shingle count and the rounded ratio."""
+    return (
+        jaccard_pairs(_docs_with_mutated_copies(spark, sf_dir), 0.6)
         .withColumn("jaccard", F.round(F.col("_j_raw"), 6))
         .select("id_a", "id_b", "n_inter", "jaccard")
     )

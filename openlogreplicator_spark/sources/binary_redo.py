@@ -457,14 +457,17 @@ def encode_redo_file(
     """records (REDO_RECORD_SCHEMA dicts, already in file order) → one
     OLRS1 file: header block + LWN-grouped data blocks. `col_types`
     (column key → number|date|timestamp) selects Oracle byte images for
-    those column values (v2)."""
+    those column values (v2). A record's optional ``extra_vectors``
+    (record dicts) follow its own vector inside the same record, like
+    the 5.1 undo vector that pairs with an 11.x redo."""
     first_scn = int(records[0]["scn"]) if records else 0
 
     # group into LWNs; encode each LWN's record bytes
     lwns: list[tuple[list[bytes], int, int]] = []  # (recs, lwn_scn, ts)
     for i in range(0, len(records), LWN_MAX_RECORDS):
         chunk = records[i: i + LWN_MAX_RECORDS]
-        recs = [encode_record(r, col_types=col_types, pos_dicts=pos_dicts)
+        recs = [encode_record(r, r.get("extra_vectors"), col_types,
+                              pos_dicts)
                 for r in chunk]
         lwn_scn = max(int(r["scn"]) for r in chunk)
         lwns.append((recs, lwn_scn, 0))
@@ -732,12 +735,6 @@ def write_binary_redo_segments(
 # --------------------------------------------------------------------------
 # decoding (the parse plane)
 # --------------------------------------------------------------------------
-
-
-def _dec_str(buf: bytes, pos: int) -> tuple[str, int]:
-    (n,) = struct.unpack_from("<H", buf, pos)
-    pos += 2
-    return buf[pos: pos + n].decode("utf-8"), pos + n
 
 
 def _dec_value_raw(
@@ -1097,36 +1094,6 @@ def _batch_decode(uniq, version: int, db_tz: int = DB_TZ_DEFAULT) -> dict:
     return out
 
 
-def _remap_images(
-    cols_list, rows_list, cache, version: int, db_tz: int = DB_TZ_DEFAULT
-) -> None:
-    """Second pass of the columnar decode: swap each dict's interned
-    tagged-bytes values for their decoded strings, in place in the
-    column lists (v1 files decoded inline and skip this)."""
-    if version < 2:
-        return
-    uniq = [t for t, v in cache.items() if v is t]
-    if not uniq:
-        return
-    decoded = _batch_decode(uniq, version, db_tz)
-    cache.update(decoded)
-    for i, d in enumerate(cols_list):
-        if d:
-            cols_list[i] = {
-                k: (v if v is None else decoded.get(v, v))
-                for k, v in d.items()
-            }
-    for i, rows in enumerate(rows_list):
-        if rows:
-            rows_list[i] = [
-                {
-                    k: (v if v is None else decoded.get(v, v))
-                    for k, v in d.items()
-                }
-                for d in rows
-            ]
-
-
 def _batch_decode_list(uniq, version: int, db_tz=DB_TZ_DEFAULT) -> list:
     """Order-preserving list view of :func:`_batch_decode`: the columnar
     parse plane dictionary-encodes the gathered value images (C++ hash)
@@ -1134,157 +1101,6 @@ def _batch_decode_list(uniq, version: int, db_tz=DB_TZ_DEFAULT) -> list:
     index order, so the final string column is a single Arrow ``take``."""
     decoded = _batch_decode(uniq, version, db_tz)
     return [decoded[t] for t in uniq]
-
-
-def _dec_cols(
-    buf: bytes, pos: int, version: int, cache: dict, kcache: dict
-) -> tuple[dict, int]:
-    # hottest loop of the record walk — STRUCTURE ONLY. u16 fields read
-    # by direct byte arithmetic (measurably cheaper than
-    # struct.unpack_from at ~300k calls/file). Column images are NOT
-    # decoded here: the walk interns the tagged image bytes (cache maps
-    # tagged → the one canonical bytes object), and the file-level
-    # caller batch-decodes the unique images per type after the walk —
-    # the reference's own split between the record walk
-    # (Parser.cpp:113-312) and value rendering (Builder.cpp:89-690).
-    # Redo streams repeat values heavily (quantities, discounts,
-    # flags), so interning also collapses the decode work to one call
-    # per distinct image. Column-name bytes memoize in their own dict
-    # (separate from the value cache so raw key bytes can never collide
-    # with tagged image bytes).
-    n = buf[pos] | (buf[pos + 1] << 8)
-    pos += 2
-    out = {}
-    for _ in range(n):
-        klen = buf[pos] | (buf[pos + 1] << 8)
-        pos += 2
-        kb = buf[pos: pos + klen]
-        pos += klen
-        k = kcache.get(kb)
-        if k is None:
-            k = kcache[kb] = kb.decode("utf-8")
-        vlen = buf[pos] | (buf[pos + 1] << 8)
-        pos += 2
-        if vlen == NULL16:
-            out[k] = None
-            continue
-        if version < 2:
-            out[k] = buf[pos: pos + vlen].decode("utf-8")
-            pos += vlen
-            continue
-        end = pos + 1 + vlen
-        tagged = buf[pos:end]
-        pos = end
-        v = cache.get(tagged)
-        if v is None:
-            cache[tagged] = tagged
-            v = tagged
-        out[k] = v
-    return out, pos
-
-
-def _dec_cols_positional(
-    buf: bytes, pos: int, version: int, cache: dict,
-    obj: int, dictionary: dict | None,
-) -> tuple[dict, int]:
-    """KDO positional column area → name-keyed dict: nulls come from the
-    bitmap, names from the dictionary's (obj → ordered column names)
-    entry. An obj absent from the dictionary falls back to positional
-    COL_<n> names — exactly the reference's schemaless rendering
-    (Builder.cpp:96-100) when the dictionary has no table."""
-    cc = buf[pos]
-    pos += 1
-    nb = (cc + 7) // 8
-    bitmap = buf[pos: pos + nb]
-    pos += nb
-    names = dictionary.get(obj) if dictionary else None
-    n_names = len(names) if names else 0
-    out = {}
-    for i in range(cc):
-        # per-column fallback: a dictionary entry with fewer names than
-        # the on-stream column count (schema drift, wrong dictionary
-        # version) degrades that column to schemaless COL_<n> rendering
-        # (Builder.cpp:96-100) instead of aborting the whole file
-        k = names[i] if i < n_names else f"COL_{i}"
-        if bitmap[i // 8] & (1 << (i % 8)):
-            out[k] = None
-            continue
-        vlen = buf[pos] | (buf[pos + 1] << 8)
-        pos += 2
-        end = pos + 1 + vlen
-        tagged = buf[pos:end]
-        pos = end
-        v = cache.get(tagged)
-        if v is None:
-            cache[tagged] = tagged
-            v = tagged
-        out[k] = v
-    return out, pos
-
-
-def _walk_vector(
-    buf: bytes, pos: int, version: int, cache: dict, kcache: dict,
-    dictionary: dict | None = None,
-) -> tuple[str, str, int | None, int | None, int | None, int,
-           dict | None, list | None, int]:
-    code, obj, bdba, slot, fb, flags = struct.unpack_from("<HIIHBB", buf, pos)
-    pos += 14
-    xid, pos = _dec_str(buf, pos)
-    cols = rows = None
-    if flags & FLAG_POSITIONAL:
-        cols, pos = _dec_cols_positional(
-            buf, pos, version, cache,
-            None if obj == NULL32 else obj, dictionary,
-        )
-    elif flags & 0x01:
-        cols, pos = _dec_cols(buf, pos, version, cache, kcache)
-    if flags & 0x02:
-        (n_rows,) = struct.unpack_from("<H", buf, pos)
-        pos += 2
-        rows = []
-        for _ in range(n_rows):
-            r, pos = _dec_cols(buf, pos, version, cache, kcache)
-            rows.append(r)
-    op = CODE_TO_OP[code]
-    if code == 0x0504 and flags & 0x04:
-        op = "rollback"
-    return (
-        xid,
-        op,
-        None if obj == NULL32 else obj,
-        None if bdba == NULL32 else bdba,
-        None if slot == NULL16 else slot,
-        fb,
-        cols,
-        rows,
-        pos,
-    )
-
-
-def decode_vector(
-    buf: bytes, pos: int, version: int = VERSION,
-    dictionary: dict | None = None, db_tz: int = DB_TZ_DEFAULT,
-) -> tuple[dict, int]:
-    cache: dict = {}
-    xid, op, obj, bdba, slot, fb, cols, rows, pos = _walk_vector(
-        buf, pos, version, cache, {}, dictionary
-    )
-    cols_l, rows_l = [cols], [rows]
-    _remap_images(cols_l, rows_l, cache, version, db_tz)
-    cols, rows = cols_l[0], rows_l[0]
-    return (
-        {
-            "xid": xid,
-            "opcode": op,
-            "obj": obj,
-            "bdba": bdba,
-            "slot": slot,
-            "fb": fb,
-            "cols": cols,
-            "rows": rows,
-        },
-        pos,
-    )
 
 
 _ARROW_SCHEMA = None
@@ -1372,17 +1188,17 @@ def _parse_flat(
     flat payload buffer. No per-vector dicts, no per-value byte slices:
     the value bytes are gathered, unique-ified (Arrow
     ``dictionary_encode``) and decoded ONCE PER DISTINCT IMAGE by
-    `_flat_to_arrow`, all vectorized. Walk semantics (framing checks,
-    IGNORE_DATA_ERRORS degradation, clamped overrun slices) mirror the
-    historical per-dict walk, which survives as the reference
-    implementation behind :func:`decode_vector`.
+    `_flat_to_arrow`, all vectorized — the reference's own split
+    between the record walk (Parser.cpp:113-312) and value rendering
+    (Builder.cpp:89-690). This is the only record walk; its output is
+    pinned by the golden digests in tests/test_parse_golden.py.
 
     Value encodings in the flat lists: ``cv_s``/``rv_s`` hold the
     image's global start offset, or -1 for a pre-decoded literal
     (v1 strings, warn-row diagnostics — index into ``vlits`` rides the
     length slot), or -2 for NULL. Every recorded (start, length) is
-    clamped to the record's LWN span exactly like the historical
-    slice, so the render-stage gather can never index out of bounds."""
+    clamped to the record's LWN span, so the render-stage gather can
+    never index out of bounds."""
     version, sequence, n_blocks, big, flags16 = _validate_blocks(data, path)
     flat: dict = {
         "version": version, "sequence": sequence, "big": big,

@@ -24,7 +24,7 @@ Reference mapping:
                            (TransactionBuffer.h:50-80 — the reference's
                            buffer is itself a hash map over xids)
 - commit flush           = Transaction::flush (Transaction.cpp:199-571)
-- state store (RocksDB)  = swap-to-disk     (MemoryManager.cpp)
+- state store            = swap-to-disk     (MemoryManager.cpp)
 - checkpoint dir         = state files      (Writer.cpp:362-400)
 
 State is an Arrow IPC stream of the not-yet-committed records (typed
@@ -32,12 +32,15 @@ REDO_RECORD columns; the T4 skiplist rides as schema metadata) in a
 BinaryType state column: one vectorized serialize per bucket per
 micro-batch instead of the earlier per-row JSON stringify/parse, which
 the r7 drain decomposition showed dominating the stateful overhead. At
-scale the state store shards by bucket across the cluster and spills
-via RocksDB — the same oldest-inactive-first pressure valve the
-reference hand-rolls. NOTE: the bucket count is part of the state key
-space, and the payload encoding is part of the state schema — changing
-either (or moving between xid- and bucket-keyed checkpoints) requires
-a fresh checkpoint, like any stateful-operator schema change.
+scale the state store shards by bucket across the cluster. It is
+Spark's default HDFS-backed provider: each partition's state lives in
+executor memory and its deltas go to the checkpoint directory (RocksDB
+only tied it in the r10 A/B, PERF.md, and was not adopted), so unlike
+the reference's swap-to-disk there is no spill. NOTE: the bucket count
+is part of the state key space, and the payload encoding is part of
+the state schema — changing either (or moving between xid- and
+bucket-keyed checkpoints) requires a fresh checkpoint, like any
+stateful-operator schema change.
 """
 
 from __future__ import annotations

@@ -374,6 +374,14 @@ def build_pipeline(
     checkpoint = os.path.join(
         checkpoint, "drain" if available_now else "continuous"
     )
+    # the ONE trigger of every sink: a drain runs to the end of the log;
+    # continuous mode's micro-batch cadence is the reference's
+    # checkpoint interval (Writer.cpp checkpoint timer). Spark's default
+    # trigger would run the reaper's no-data batches back to back.
+    trigger = (
+        {"availableNow": True} if available_now
+        else {"processingTime": f"{cfg.checkpoint_interval_s} seconds"}
+    )
 
     if sink == "network" and network_server is None:
         # build-time, like the kafka/file sinks — without this the
@@ -537,8 +545,10 @@ def build_pipeline(
     if sink == "lake":
         from openlogreplicator_spark.streaming.sinks import write_lake_sink
 
-        return write_lake_sink(
-            events, out_dir, checkpoint, available_now=available_now
+        return (
+            write_lake_sink(events, out_dir, checkpoint)
+            .trigger(**trigger)
+            .start()
         )
     if sink == "network":
         from openlogreplicator_spark.streaming.stream_network import (
@@ -589,13 +599,7 @@ def build_pipeline(
             )
             events = events.unionByName(chk)
 
-        writer = events.writeStream.queryName(query_name)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(
-                processingTime=f"{cfg.checkpoint_interval_s} seconds"
-            )
+        writer = events.writeStream.queryName(query_name).trigger(**trigger)
         net_cap = max_message_mb * 1024 * 1024 if max_message_mb else None
         net_encoder = None
         if payload_format == "json":
@@ -745,14 +749,9 @@ def build_pipeline(
                 )
             fwriter = messages.writeStream.queryName(query_name)
             fb_fn = fb
-        if available_now:
-            fwriter = fwriter.trigger(availableNow=True)
-        else:
-            fwriter = fwriter.trigger(
-                processingTime=f"{cfg.checkpoint_interval_s} seconds"
-            )
         return (
-            fwriter.foreachBatch(fb_fn)
+            fwriter.trigger(**trigger)
+            .foreachBatch(fb_fn)
             .option("checkpointLocation", checkpoint)
             .start()
         )
@@ -783,14 +782,7 @@ def build_pipeline(
         writer = messages.writeStream.queryName(query_name)
     else:
         writer = events.writeStream.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        # continuous mode: the micro-batch cadence is the reference's
-        # checkpoint interval (Writer.cpp checkpoint timer)
-        writer = writer.trigger(
-            processingTime=f"{cfg.checkpoint_interval_s} seconds"
-        )
+    writer = writer.trigger(**trigger)
     if sink == "kafka":
         # W2: rendered (key, value) messages produced over the Kafka
         # wire protocol; kafka_bootstrap/kafka_topic configure the

@@ -130,7 +130,6 @@ def write_lake_sink(
     path: str,
     checkpoint: str,
     partition_cols: tuple[str, ...] = ("owner", "table"),
-    available_now: bool = True,
 ):
     """Warehouse/lake sink: change events land as parquet partitioned by
     the replicated table's identity — the layout a downstream MERGE/SCD2
@@ -138,14 +137,13 @@ def write_lake_sink(
     consumer). Exactly-once via the streaming commit log. At 100 TB the
     partition columns bound file counts by table cardinality, not row
     count; within a partition, files are epoch-sized and carry tight
-    commit_scn min/max stats for incremental consumers."""
-    w = (
+    commit_scn min/max stats for incremental consumers. Returns the
+    unstarted ``DataStreamWriter``: the caller (``build_pipeline``)
+    sets the trigger it uses for every sink, then starts it."""
+    return (
         events.writeStream.format("parquet")
         .partitionBy(*partition_cols)
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()

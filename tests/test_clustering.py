@@ -222,9 +222,9 @@ def test_jaccard_df_cap_excludes_boilerplate(spark):
     in MORE than _SHINGLE_DF_CAP documents generates no candidate
     pairs, while pairs sharing rare shingles survive with the same
     threshold gate."""
-    from openlogreplicator_spark.operators.clustering import (
+    from openlogreplicator_spark.operators.dedup import (
         _SHINGLE_DF_CAP,
-        _jaccard_pairs,
+        jaccard_pairs,
     )
 
     body = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
@@ -235,7 +235,7 @@ def test_jaccard_df_cap_excludes_boilerplate(spark):
         for i in range(_SHINGLE_DF_CAP + 1)
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.id_a, r.id_b) for r in _jaccard_pairs(corpus, 0.6).collect()}
+    got = {(r.id_a, r.id_b) for r in jaccard_pairs(corpus, 0.6).collect()}
     # docs 1/2 share 9 of 11 distinct shingles (J = 0.818); every
     # boilerplate-only doc pair must be suppressed by the cap
     assert got == {(1, 2)}

@@ -234,6 +234,56 @@ def test_pipeline_continuous_mode_emits_and_stops(spark, redo_dir, tmp_path):
     assert not q.isActive
 
 
+def test_pipeline_continuous_lake_sink_keeps_the_checkpoint_interval(
+    spark, redo_dir, tmp_path
+):
+    """A continuous lake query runs on the checkpoint-interval trigger
+    like every other sink. Under Spark's default trigger the armed
+    reaper timeout made it run no-data micro-batches back to back over
+    an idle log. On the interval trigger an idle batch waits for the
+    next multiple of the interval (epoch time) before it starts."""
+    from datetime import datetime
+
+    d, _ = redo_dir
+    interval_ms, slack_ms = 3000, 250
+    q = build_pipeline(
+        spark,
+        EngineConfig(checkpoint_interval_s=interval_ms // 1000),
+        d,
+        checkpoint=str(tmp_path / "ckpt_lake_cont"),
+        out_dir=str(tmp_path / "lake_cont"),
+        sink="lake",
+        available_now=False,
+    )
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline and not any(
+            p["numInputRows"] for p in q.recentProgress
+        ):
+            time.sleep(0.5)
+        assert any(p["numInputRows"] for p in q.recentProgress)
+        idle_from = len(q.recentProgress)
+        time.sleep(4 * interval_ms / 1000)  # no redo arrives from here on
+        batches = q.recentProgress[idle_from - 1:]
+    finally:
+        q.stop()
+
+    def start_ms(p):
+        ts = datetime.fromisoformat(p["timestamp"].replace("Z", "+00:00"))
+        return round(ts.timestamp() * 1000)
+
+    idle = batches[1:]
+    assert len(idle) >= 2 and all(p["numInputRows"] == 0 for p in idle)
+    waited = 0
+    for prev, p in zip(batches, idle):
+        prev_end = start_ms(prev) + prev["durationMs"]["triggerExecution"]
+        if start_ms(p) - prev_end >= slack_ms:
+            # a batch that waited for its trigger starts on a boundary
+            waited += 1
+            assert start_ms(p) % interval_ms < slack_ms, p["timestamp"]
+    assert waited, [(p["timestamp"], p["durationMs"]) for p in batches]
+
+
 def test_pipeline_rejects_legacy_checkpoint_layout(spark, redo_dir, tmp_path):
     """Round-4 ADVICE: a pre-suffix deployment has Spark's checkpoint
     ('offsets' dir) directly at the caller's path; silently relocating
