@@ -136,7 +136,7 @@ def chain_page_numbers(chains: DataFrame) -> DataFrame:
             {"lob_id": out_lob, "dba": out_dba, "page_no": out_no}
         )
 
-    # shared bucket heuristic (one per core, floor 32, honoring the
+    # shared batch bucket default (one per core, honoring the
     # spark.olrs.assembly.buckets override) — was a hand-copy that
     # ignored the tuning knob the assembly stage honors (r12 review)
     from openlogreplicator_spark.operators.transaction_assembly import (

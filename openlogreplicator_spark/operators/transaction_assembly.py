@@ -846,12 +846,17 @@ def _assemble_stream(
 
 
 def _default_buckets(records: DataFrame) -> int:
-    """One bucket per session core, floor 32. Python-runner tasks carry
-    a measured ~15-20 ms serialized launch cost each (daemon fork +
-    Arrow channel handshake), so oversubscribing buckets 4-8× the core
-    count — the classic skew rule — costs more in task launches than it
-    saves in balance here: at sf0.1 dropping 128 buckets to 32 removed
-    ~1.9 s from the assembly stage.
+    """One bucket per session core. In the batch plan the buckets ARE
+    the assembly stage's partitions, so the best count is the fewest
+    tasks that keep every core busy: each Python-runner task carries a
+    ~15-20 ms serialized launch (daemon fork + Arrow channel handshake)
+    before it assembles a row. The earlier floor of 32 was tuned at
+    ``local[32]``; at ``local[4]`` it ran 8 tasks per core, and
+    dropping it to 4 buckets cut ``cdc_txn_assembly`` from 40 to 12
+    tasks and its wall from 1.54 to 0.80 s at sf0.001 (7.37 to 6.44 s
+    at sf0.1), with identical output (PERF.md "Batch assembly: one
+    bucket per core"). The streaming default differs on purpose
+    (`streaming_assemble`: buckets must match the state partitions).
 
     MEMORY ENVELOPE: a bucket within ``spark.olrs.assembly.
     spillThresholdMb`` (default 256) assembles from one in-memory Arrow
@@ -862,9 +867,7 @@ def _default_buckets(records: DataFrame) -> int:
     (or ``n_buckets``) still tunes the parallelism/launch-latency
     trade."""
     sess = records.sparkSession
-    return _assembly_buckets(
-        sess, max(32, sess.sparkContext.defaultParallelism)
-    )
+    return _assembly_buckets(sess, sess.sparkContext.defaultParallelism)
 
 
 def _assembly_buckets(sess, default: int) -> int:
@@ -874,18 +877,23 @@ def _assembly_buckets(sess, default: int) -> int:
     The value must be a positive integer: ``0`` would build
     ``pmod(xxhash64(xid), 0)``, which fails the first task under ANSI
     mode, so a bad value raises here, before any job runs."""
-    raw = sess.conf.get("spark.olrs.assembly.buckets", None)
+    return _conf_int(sess, "spark.olrs.assembly.buckets", default, 1)
+
+
+def _conf_int(sess, key: str, default: int, minimum: int) -> int:
+    """Integer conf ``key``, or ``default`` when unset. A non-integer or
+    a value below ``minimum`` raises ValueError naming the conf, at
+    wiring, instead of failing a task or silently using the default."""
+    raw = sess.conf.get(key, None)
     if raw is None:
         return default
     try:
         n = int(raw)
     except (ValueError, TypeError):
-        n = 0
-    if n <= 0:
-        raise ValueError(
-            f"spark.olrs.assembly.buckets={raw!r}: must be a "
-            "positive integer"
-        )
+        n = minimum - 1
+    if n < minimum:
+        kind = "positive" if minimum > 0 else "non-negative"
+        raise ValueError(f"{key}={raw!r}: must be a {kind} integer")
     return n
 
 
@@ -927,20 +935,13 @@ def assemble_transactions(
     """
     if n_buckets is None:
         n_buckets = _default_buckets(records)
-    try:
-        spill_mb = int(
-            records.sparkSession.conf.get(
-                "spark.olrs.assembly.spillThresholdMb", "256"
-            )
-        )
-    except Exception:
-        spill_mb = 256
-    try:
-        swap_dir = records.sparkSession.conf.get(
-            "spark.olrs.assembly.swapPath", ""
-        ) or None
-    except Exception:
-        swap_dir = None
+    # 0 is valid: it stages every bucket to disk
+    spill_mb = _conf_int(
+        records.sparkSession, "spark.olrs.assembly.spillThresholdMb", 256, 0
+    )
+    swap_dir = records.sparkSession.conf.get(
+        "spark.olrs.assembly.swapPath", ""
+    ) or None
 
     def kernel(batches):
         yield from _assemble_stream(

@@ -547,6 +547,7 @@ def build_pipeline(
 
         return (
             write_lake_sink(events, out_dir, checkpoint)
+            .queryName(query_name)
             .trigger(**trigger)
             .start()
         )

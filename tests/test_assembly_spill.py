@@ -11,6 +11,8 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+
 _PROBE = textwrap.dedent(
     """
     import resource, sys
@@ -189,3 +191,28 @@ def test_forced_spill_honors_swap_path(spark, tmp_path):
     finally:
         spark.conf.unset("spark.olrs.assembly.spillThresholdMb")
         spark.conf.unset("spark.olrs.assembly.swapPath")
+
+
+@pytest.mark.parametrize("bad", ["abc", "-1"])
+def test_bad_spill_threshold_is_rejected_at_wiring(spark, bad):
+    """A non-integer or negative ``spark.olrs.assembly.spillThresholdMb``
+    raises ValueError naming the conf when the plan is wired, before any
+    job runs. It used to be replaced by the 256 MB default without a
+    word, so a typo silently disabled the configured memory bound."""
+    from openlogreplicator_spark.operators.transaction_assembly import (
+        assemble_transactions,
+    )
+    from openlogreplicator_spark.sources.redo_gen import (
+        generate_redo_records,
+        redo_records_df,
+    )
+
+    df = redo_records_df(spark, generate_redo_records(n_txns=2, seed=3))
+    spark.conf.set("spark.olrs.assembly.spillThresholdMb", bad)
+    try:
+        with pytest.raises(
+            ValueError, match="spark.olrs.assembly.spillThresholdMb"
+        ):
+            assemble_transactions(df)
+    finally:
+        spark.conf.unset("spark.olrs.assembly.spillThresholdMb")

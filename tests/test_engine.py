@@ -115,6 +115,26 @@ def test_pipeline_lake_sink_partitions_by_table(spark, redo_dir, tmp_path):
     assert pruned.count() > 0
 
 
+def test_pipeline_lake_sink_takes_the_query_name(spark, redo_dir, tmp_path):
+    """The lake query carries the caller's ``query_name`` like every
+    other sink, so it can be found in ``spark.streams`` and in the
+    progress events by name."""
+    d, _ = redo_dir
+    q = build_pipeline(
+        spark,
+        EngineConfig(),
+        d,
+        checkpoint=str(tmp_path / "ckpt_lake_named"),
+        out_dir=str(tmp_path / "lake_named"),
+        sink="lake",
+        query_name="olr_lake_named",
+    )
+    try:
+        assert q.name == "olr_lake_named"
+    finally:
+        drain(q)
+
+
 def test_pipeline_heartbeats_and_metrics(spark, redo_dir, tmp_path):
     d, records = redo_dir
     cfg = EngineConfig(fmt=Format(attributes=True))

@@ -465,12 +465,29 @@ def test_assembly_bucket_conf_override(spark):
         spark, [{"scn": 1, "xid": "b", "opcode": "begin"}]
     )
     base = _default_buckets(records)
-    assert base >= 32
+    assert base == spark.sparkContext.defaultParallelism
     spark.conf.set("spark.olrs.assembly.buckets", "128")
     try:
         assert _default_buckets(records) == 128
     finally:
         spark.conf.unset("spark.olrs.assembly.buckets")
+
+
+def test_batch_assembly_runs_one_bucket_per_core(spark, sf_dir):
+    """The batch assembly stage of ``cdc_txn_assembly`` has one
+    partition per core: the buckets are the stage's partitions, so more
+    of them only add Python-runner task launches. Neither the former
+    floor of 32 nor the streaming default (``shuffle.partitions``, 8 in
+    this session) applies here."""
+    from openlogreplicator_spark.operators.cdc import (
+        _orders_redo_assembled,
+    )
+
+    assembled = _orders_redo_assembled(spark, sf_dir)
+    assert (
+        assembled.rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
 
 
 def test_max_ops_vectorized_routing(spark):
